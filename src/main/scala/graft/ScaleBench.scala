@@ -24,8 +24,9 @@ import graft.operators.{DedupOps, SimilarityOps}
   * `simdemo`: the reference's own demo scale (BASELINE.md workloads A+B:
   * 100k×16 fair coin + 60k×32 biased coin = 160k traces, ≈3.5 M points,
   * Philox) generated AND written through the reference-parity CSV sink,
-  * wall-clock on the session master (run with SPARK_GRAFT_CPUS=4 to match
-  * the baseline's local[4] row).
+  * next to the same battery through the partitioned-text sink, wall-clock
+  * on the session master (run with SPARK_GRAFT_CPUS=4 to match the
+  * baseline's local[4] row). `simdemo10x` runs it at 10×.
   *
   * Results are recorded in BENCHNOTES.md.
   */
@@ -777,7 +778,9 @@ object ScaleBench {
     * `mult = 10` (1.6 M traces, ≈35 M points) is the linearity point —
     * the Range→Project generation plan is scale-invariant (PlanSpec pins
     * the 10× shape: no Exchange at any trace count), so wall-clock should
-    * track points generated.
+    * track points generated. The same battery also goes through
+    * [[TraceSink.writePartitionedText]]: the reference-parity sink's
+    * target is to stay within 1.5× of that distributed sink.
     */
   private def runSimDemo(spark: SparkSession, mult: Int = 1): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-simdemo")
@@ -786,20 +789,28 @@ object ScaleBench {
         Some(s"$tmp/0.txt")),
       SimulationSpec(1, "coin_sequence", 60000L * mult, 32, Seq(0.7), Nil, 43,
         Some(s"$tmp/1.txt")))
-    // one throwaway mini-run to absorb JIT/codegen so the measured number
-    // is the engine, not first-query session cost
+    def battery(ss: Seq[SimulationSpec]) = new MCBattery(spark, RngFamily.Philox).simulate(ss)
+    def time(body: => Unit): Double = {
+      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+    }
+    // one throwaway mini-run per sink to absorb JIT/codegen so the measured
+    // number is the engine, not first-query session cost
     val warm = specs.map(s => s.copy(numberSimulations = 100L,
       outputPath = Some(s"$tmp/warm_${s.modelId}.txt")))
-    TraceSink.writeReferenceCsv(
-      new MCBattery(spark, RngFamily.Philox).simulate(warm), warm)
-    val t0 = System.nanoTime()
-    TraceSink.writeReferenceCsv(
-      new MCBattery(spark, RngFamily.Philox).simulate(specs), specs)
-    val sec = (System.nanoTime() - t0) / 1e9
-    val pts = specs.map(s => s.numberSimulations * (s.numberPoints + 1)).sum
+    TraceSink.writeReferenceCsv(battery(warm), warm)
+    TraceSink.writePartitionedText(battery(warm), s"$tmp/warm_text")
+    // min-of-two per sink, interleaved
+    val runs = (1 to 2).map { _ =>
+      (time(TraceSink.writeReferenceCsv(battery(specs), specs)),
+        time(TraceSink.writePartitionedText(battery(specs), s"$tmp/text")))
+    }
+    val sec = runs.map(_._1).min
+    val textSec = runs.map(_._2).min
+    val pts = specs.map(s => s.numberSimulations * (s.numberPoints + s.startingPoint.size)).sum
     println(f"[simdemo] workloads A+B: ${specs.map(_.numberSimulations).sum}%,d traces, " +
-      f"$pts%,d points, generated+written in $sec%.2f s on ${spark.sparkContext.master}")
-    println(f"""{"metric":"simdemo","mult":$mult,"traces":${specs.map(_.numberSimulations).sum},"points":$pts,"sec":$sec%.3f,"master":"${spark.sparkContext.master}"}""")
+      f"$pts%,d points, generated+written in $sec%.2f s (partitioned text $textSec%.2f s, " +
+      f"ratio ${sec / textSec}%.2f) on ${spark.sparkContext.master}")
+    println(f"""{"metric":"simdemo","mult":$mult,"traces":${specs.map(_.numberSimulations).sum},"points":$pts,"sec":$sec%.3f,"text_sec":$textSec%.3f,"master":"${spark.sparkContext.master}"}""")
   }
 
   /** Bucketed-layout payoff: the SAME join+agg on the bucket key, read from

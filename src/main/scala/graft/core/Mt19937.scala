@@ -22,6 +22,15 @@ package graft.core
   * order. Stateless single-point access ([[Rngs.uniform]]) costs O(step)
   * — the documented price of this family; prefer PCG64/Philox/CounterHash
   * when point access matters.
+  *
+  * Bound: seeding is per trace, and `init_by_array` fills and mixes the
+  * whole 624-word state before the first draw. On a 4-core x86 host the
+  * benchmark's single-thread probes put one stream construction plus its
+  * first draw (`rng.mt19937.init_ns`) at 10–20 µs, against 15–45 ns for
+  * PCG64, Philox, SFC64 and CounterHash, while the per-draw cost
+  * (`draw_ns`) is similar across all five families. Batteries of many
+  * short traces therefore pay 10–20 µs per trace in this family on
+  * top of the draws; that is the family's documented bound, not a defect.
   */
 final class Mt19937 private (private val mt: Array[Int]) {
   private var idx = 624

@@ -2,6 +2,7 @@ package graft.core
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Distributed sinks: per-model partitioned text (reference CSV format per
   * line) and partitioned parquet (array type preserved).
@@ -42,6 +43,59 @@ class SinkSpec extends SparkTestBase {
     val b = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s"$tmp/b.csv"))
     assert(a.size == 4 && a == b)
     assert(java.nio.file.Files.size(java.nio.file.Paths.get(s"$tmp/none.csv")) == 0)
+  }
+
+  private def csvSpecs(dir: java.nio.file.Path, tag: String) = specs.map(s =>
+    s.copy(outputPath = Some(dir.resolve(s"$tag-${s.modelId}.csv").toString)))
+
+  private def bytes(s: SimulationSpec): Seq[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s.resolvedOutputPath)).toSeq
+
+  test("writeReferenceCsv: unordered input takes the sorted fallback and still writes sim-ordered files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-csv-order")
+    val traces = new MCBattery(spark).simulate(specs)
+    val direct = csvSpecs(dir, "direct")
+    val shuffled = csvSpecs(dir, "shuffled")
+    val doubled = csvSpecs(dir, "doubled")
+    TraceSink.writeReferenceCsv(traces, direct)
+    TraceSink.writeReferenceCsv(traces.repartition(7), shuffled)
+    TraceSink.writeReferenceCsv(traces.union(traces).repartition(5), doubled)
+    direct.zip(shuffled).foreach { case (d, s) => assert(bytes(s) == bytes(d), s.resolvedOutputPath) }
+    direct.zip(doubled).foreach { case (d, s) =>
+      val once = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(d.resolvedOutputPath))
+      val twice = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s.resolvedOutputPath))
+      assert(once.size == d.numberSimulations)
+      val expected = (0 until once.size).flatMap(i => Seq(once.get(i), once.get(i)))
+      assert(twice.toArray.toSeq == expected, s.resolvedOutputPath)
+    }
+  }
+
+  test("writeReferenceCsv output does not depend on the partition count") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-csv-parts")
+    val battery = new MCBattery(spark)
+    val one = csvSpecs(dir, "p1")
+    val many = csvSpecs(dir, "p13")
+    TraceSink.writeReferenceCsv(battery.simulate(specs, Some(1)), one)
+    TraceSink.writeReferenceCsv(battery.simulate(specs, Some(13)), many)
+    one.zip(many).foreach { case (a, b) =>
+      assert(bytes(a).nonEmpty && bytes(a) == bytes(b), b.resolvedOutputPath)
+    }
+  }
+
+  test("writeReferenceCsv removes its temp dir when the write fails") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-csv-fail")
+    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def sinkDirs(): Set[String] = {
+      val listing = java.nio.file.Files.list(tmpRoot)
+      try listing.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("graft-sink[0-9]+")).toSet
+      finally listing.close()
+    }
+    val before = sinkDirs()
+    val broken = new MCBattery(spark).simulate(specs)
+      .withColumn("trace", when(col("sim_id") === 3, raise_error(lit("boom"))).otherwise(col("trace")))
+    intercept[Exception](TraceSink.writeReferenceCsv(broken, csvSpecs(dir, "broken")))
+    assert((sinkDirs() -- before).isEmpty)
   }
 
   test("writeParquet round-trips the array column and partitions by model") {
